@@ -3234,7 +3234,12 @@ def q_cluster_quality_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     clusters = _doc_clusters(spark, sf_dir)
     truth = d.select(F.col("doc_id").alias("id"), F.md5("text").alias("true_cluster"))
-    return evaluation.cluster_quality(clusters, truth)
+    # the contract's scalar types: the operator's decimal(38,0) counts
+    # (sized for ~n²/2 pairs) fit a long at document-table scale
+    q = evaluation.cluster_quality(clusters, truth)
+    return q.select(
+        *(F.col(c).cast("bigint").alias(c) if c in ("tp", "fp", "fn", "tn") else c for c in q.columns)
+    )
 
 
 def q_cluster_quality_ext_docs(spark, sf_dir):
@@ -5230,10 +5235,10 @@ def oracle_sql() -> dict[str, str]:
                          n_items * (n_items - 1) - pred2 - true2 + tp2 AS tn2
                   FROM s, a, b)
             SELECT CAST(n_items AS BIGINT) AS n_items,
-                   CAST(tp2 // 2 AS DECIMAL(38,0)) AS tp,
-                   CAST(fp2 // 2 AS DECIMAL(38,0)) AS fp,
-                   CAST(fn2 // 2 AS DECIMAL(38,0)) AS fn,
-                   CAST(tn2 // 2 AS DECIMAL(38,0)) AS tn,
+                   CAST(tp2 // 2 AS BIGINT) AS tp,
+                   CAST(fp2 // 2 AS BIGINT) AS fp,
+                   CAST(fn2 // 2 AS BIGINT) AS fn,
+                   CAST(tn2 // 2 AS BIGINT) AS tn,
                    round(CASE WHEN CAST(n_items * (n_items - 1) AS DOUBLE) = 0
                          THEN 1.0
                          ELSE (CAST(tp2 AS DOUBLE) + CAST(tn2 AS DOUBLE))
@@ -5251,9 +5256,10 @@ def oracle_sql() -> dict[str, str]:
                                  + (CAST(tp2 AS DOUBLE) + CAST(fn2 AS DOUBLE))
                                  * (CAST(fn2 AS DOUBLE) + CAST(tn2 AS DOUBLE)))
                          END, 6) AS ari,
-                   round(CASE WHEN (CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE))
-                                   * (CAST(tp2 AS DOUBLE) + CAST(fn2 AS DOUBLE)) = 0
+                   round(CASE WHEN CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE)
+                                   + CAST(fn2 AS DOUBLE) = 0
                          THEN 1.0
+                         WHEN CAST(tp2 AS DOUBLE) = 0 THEN 0.0
                          ELSE CAST(tp2 AS DOUBLE)
                               / sqrt((CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE))
                                      * (CAST(tp2 AS DOUBLE) + CAST(fn2 AS DOUBLE)))

@@ -66,9 +66,23 @@ def test_cluster_quality_perfect_and_degenerate(spark):
     )
     got = _one(evaluation.cluster_quality(singles, strue))
     assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (0, 0, 0, 1)
-    # all-singleton: zero FM denominator -> 1.0 by the module's
-    # trivial-agreement convention (sklearn reports 0.0 here)
+    # all-singleton on both sides (tp = fp = fn = 0): 1.0 by the
+    # module's trivial-agreement convention
     assert got["ari"] == 1.0 and got["fowlkes_mallows"] == 1.0
+
+    # one-sided degenerate: the prediction merges what the truth keeps
+    # apart (tp=0, fp>0, fn=0) — the FM denominator is 0, but no true
+    # pair was found, so FM is 0.0 (sklearn's value), not 1.0
+    merged = spark.createDataFrame(
+        [("a", "m"), ("b", "m")], "id string, cluster_id string"
+    )
+    got = _one(evaluation.cluster_quality(merged, strue))
+    assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (0, 1, 0, 0)
+    assert got["fowlkes_mallows"] == 0.0
+    # and the mirror image (tp=0, fp=0, fn>0)
+    got = _one(evaluation.cluster_quality(singles, merged.withColumnRenamed("cluster_id", "true_cluster")))
+    assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (0, 0, 1, 0)
+    assert got["fowlkes_mallows"] == 0.0
 
     # empty intersection: all-zero counts, indices report 1.0
     other = spark.createDataFrame(
@@ -155,7 +169,15 @@ def _ref_quality(assign: dict[str, str], truth: dict[str, str]):
     ari = 1.0 if denom == 0 else 2.0 * (tp * tn - fn * fp) / denom
     total = tp + fp + fn + tn
     ri = 1.0 if total == 0 else (tp + tn) / total
-    return len(ids), tp, fp, fn, tn, round(ri, 6), round(ari, 6)
+    # FM: 1.0 only with no pair together on either side; 0.0 whenever
+    # tp = 0 otherwise (sklearn's value), even at a zero denominator
+    if tp + fp + fn == 0:
+        fm = 1.0
+    elif tp == 0:
+        fm = 0.0
+    else:
+        fm = tp / ((tp + fp) * (tp + fn)) ** 0.5
+    return len(ids), tp, fp, fn, tn, round(ri, 6), round(ari, 6), round(fm, 6)
 
 
 def test_cluster_quality_matches_pair_counting_reference(spark):
@@ -185,7 +207,7 @@ def test_cluster_quality_matches_pair_counting_reference(spark):
         want = _ref_quality(assign, truth)
         assert (
             got["n_items"], got["tp"], got["fp"], got["fn"], got["tn"],
-            got["rand_index"], got["ari"],
+            got["rand_index"], got["ari"], got["fowlkes_mallows"],
         ) == want, (pred, true)
 
 
@@ -327,11 +349,13 @@ def test_cluster_quality_extended_matches_reference_on_skewed_corpus(spark):
 
 
 def test_cluster_quality_extended_random_labelings_match_reference(spark):
-    """Seeded sweep: six random (clustering, truth) shapes — balanced,
-    skewed, singleton-heavy, nested, independent, identical — must all
-    match the textbook reference within rounding. Catches identity
-    mistakes (e.g. swapped homogeneity/completeness) that symmetric
-    hand cases cannot."""
+    """Seeded sweep: seven random (clustering, truth) shapes — balanced,
+    skewed, singleton-heavy, nested, independent, identical, and
+    one-sided (tp=0, fp>0, fn=0: the prediction merges an all-singleton
+    truth) — must all match the textbook reference within rounding,
+    the element/entropy report and the pair report's Fowlkes-Mallows
+    both. Catches identity mistakes (e.g. swapped
+    homogeneity/completeness) that symmetric hand cases cannot."""
     import numpy as np
 
     rng = np.random.default_rng(2026)
@@ -346,6 +370,7 @@ def test_cluster_quality_extended_random_labelings_match_reference(spark):
             lambda i, r=rng.integers(0, 6, 120): f"t{r[i]}",
         ),
         ("identical", lambda i: f"g{i % 8}", lambda i: f"g{i % 8}"),
+        ("one_sided", lambda i: f"c{i % 6}", lambda i: f"t{i}"),
     ]
     for name, cf, tf in shapes:
         rows = [(f"id{i}", cf(i), tf(i)) for i in range(120)]
@@ -361,3 +386,10 @@ def test_cluster_quality_extended_random_labelings_match_reference(spark):
             _assert_close(got, want)
         except AssertionError as e:
             raise AssertionError(f"shape {name}: {e}") from e
+        pair = _one(evaluation.cluster_quality(cl, tr))
+        ref = _ref_quality({i: c for i, c, _ in rows}, {i: t for i, _, t in rows})
+        assert (pair["tp"], pair["fp"], pair["fn"], pair["fowlkes_mallows"]) == (
+            ref[1], ref[2], ref[3], ref[7]
+        ), name
+        if name == "one_sided":  # really the degenerate FM case
+            assert ref[1] == 0 and ref[2] > 0 and ref[3] == 0 and ref[7] == 0.0

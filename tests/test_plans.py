@@ -8,6 +8,8 @@ O1/O6; the judge's scale criteria)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +64,100 @@ def test_ladder_narrow_never_shuffles_payload(spark):
     for ln in plan.splitlines():
         if "Exchange hashpartitioning" in ln:
             assert "payload" not in ln, ln
+
+
+def _plan_blocks(plan: str) -> list[str]:
+    """The per-node detail blocks of a formatted plan, ``(k) Name ...``."""
+    return re.split(r"\n(?=\(\d+\) )", plan.split("\n\n", 1)[1])
+
+
+def _star_verify_corpus(spark):
+    """A viral caption (one re-encode family plus pixel-unrelated rows)
+    and small caption groups of lossy pairs, with phash, all-pairs
+    candidates within each caption."""
+    import numpy as np
+    import pandas as pd
+
+    from yadf_spark.fixtures import codec
+
+    rng = np.random.default_rng(8)
+    base = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    rows = []
+    for i in range(60):
+        px = base if i % 3 == 0 else rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+        enc = codec.encode_jpeg(px, 2 + i % 4)
+        rows.append((f"v{i:03d}", enc, "viral", codec.perceptual_hash(codec.decode_image(enc))))
+    for g in range(8):
+        px = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+        for k in range(3):
+            enc = codec.encode_jpeg(px, 2 + k)
+            rows.append((f"s{g}-{k}", enc, f"small {g}", codec.perceptual_hash(codec.decode_image(enc))))
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["image_id", "bytes", "caption", "phash"]))
+    ids = [r[0] for r in rows]
+    cap = {r[0]: r[2] for r in rows}
+    pairs = spark.createDataFrame(
+        [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :] if cap[a] == cap[b]],
+        "id_a string, id_b string",
+    )
+    return df, pairs
+
+
+def test_verify_decode_tier_never_shuffles_payload(spark):
+    """O6 for the decode tier, in the EXECUTED (AQE-final) plan: only id
+    pairs cross a hash-partitioned shuffle; payloads attach behind the
+    broadcast semi-join and reach the cogroup without an exchange. The
+    tier is one Python exec node — the cogrouped kernel — with no
+    per-pair scalar UDF beside it."""
+    from yadf_spark.operators import verify
+
+    df, pairs = _star_verify_corpus(spark)
+    out = verify.verify_pairs(pairs, df, star_caption_groups_above=4)
+    assert out.filter("verified").count() > 0
+    out.collect()
+    plan = _formatted(out)
+    assert "isFinalPlan=true" in plan
+    shuffles = [
+        b for b in _plan_blocks(plan)
+        if re.match(r"\(\d+\) Exchange", b) and "hashpartitioning" in b
+    ]
+    assert shuffles, plan
+    for blk in shuffles:
+        assert not re.search(r"\b_?bytes#", blk), blk
+    final_tree = plan.split("\n\n", 1)[0].split("== Initial Plan ==")[0]
+    # one shuffle of id pairs; the member side reuses it
+    assert len(re.findall(r"(?<![A-Za-z])Exchange \(", final_tree)) == 1, final_tree
+    assert final_tree.count("FlatMapCoGroupsInArrow") == 1, final_tree
+    assert "EvalPython" not in plan, plan
+
+
+def test_verify_star_chunks_bound_python_group_size(spark):
+    """A viral star subgroup never lands in one Python group: its
+    members split into hash chunks of about star_caption_groups_above,
+    each with the representative. With 400 members and a threshold of 4,
+    every group holds at most 4x the threshold payloads plus the
+    representative, and every member is scored in exactly one group."""
+    from yadf_spark.operators import verify
+
+    n, above = 400, 4
+    ids = [f"m{i:04d}" for i in range(n)]
+    images = spark.createDataFrame(
+        [(i, b"x", "viral caption", 99) for i in ids],
+        "image_id string, bytes binary, caption string, phash long",
+    )
+    narrow = spark.createDataFrame(
+        [(ids[0], i, 1, True, False) for i in ids[1:]],
+        "id_a string, id_b string, cap_a long, caption_equal boolean, bytes_equal boolean",
+    )
+    groups = verify._decode_groups(narrow, images, "image_id", "caption", above, False)
+    by_group: dict = {}
+    for r in groups.collect():
+        by_group.setdefault(r["_g"], set()).update((r["id_a"], r["id_b"]))
+    sizes = sorted(len(m) for m in by_group.values())
+    assert len(by_group) >= n // (2 * above), sizes
+    assert sizes[-1] <= 4 * above + 1, sizes
+    assert all(ids[0] in m for m in by_group.values())
+    members = [i for m in by_group.values() for i in m if i != ids[0]]
+    assert sorted(members) == ids[1:]
 
 
 def test_ladder_counts_use_partial_aggregates_not_windows(spark):

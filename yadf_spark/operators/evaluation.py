@@ -68,8 +68,10 @@ def cluster_quality(
       computed from the doubled counts (the ratios are
       scale-invariant), with degenerate zero denominators reported as
       1.0 (both labelings trivially agree — the module's convention,
-      matching RI/ARI on all-singleton inputs; sklearn reports FM 0.0
-      there).
+      matching RI/ARI on all-singleton inputs). FM is 1.0 only when
+      tp = fp = fn = 0 (no pair together on either side); with tp = 0
+      and fp or fn positive it is 0.0, as sklearn reports, even where
+      one side's pair count — and so the formula's denominator — is 0.
 
     Scale shape: one (cluster, truth) cell aggregation over the joined
     frame (narrow rows, O(cells) state), then per-side marginals read
@@ -111,9 +113,10 @@ def cluster_quality(
     ri = F.when(total2.cast("double") == F.lit(0.0), F.lit(1.0)).otherwise(
         (tp_d + tn_d) / total2.cast("double")
     )
-    fm_denom = (tp_d + fp_d) * (tp_d + fn_d)
-    fm = F.when(fm_denom == F.lit(0.0), F.lit(1.0)).otherwise(
-        tp_d / F.sqrt(fm_denom)
+    fm = (
+        F.when(tp_d + fp_d + fn_d == F.lit(0.0), F.lit(1.0))
+        .when(tp_d == F.lit(0.0), F.lit(0.0))
+        .otherwise(tp_d / F.sqrt((tp_d + fp_d) * (tp_d + fn_d)))
     )
     # counts stay decimal(38,0): tn ~ n²/2 exceeds long (and would
     # CAST_OVERFLOW under ANSI mode) above ~4.3e9 evaluated items; the
